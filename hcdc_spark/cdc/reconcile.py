@@ -13,23 +13,27 @@ and state-store scans (SURVEY §2A T9-T12):
    synthesizes the destination DELETE the same way
    (SourceTransactionProcessor.java:689-704).
 
-2. **Per-inode fold** — ``applyInPandas`` grouped by inode_id running
-   the pure-Python state machine. Keying by inode (not path, as the
-   reference does) keeps renames inside one group, so the
+2. **Per-inode fold** — ``mapInArrow`` over the log hash-partitioned
+   by inode_id and sorted by (inode_id, tx_id), running the pure-Python
+   state machine once per contiguous inode run. Keying by inode (not
+   path, as the reference does) keeps renames inside one group, so the
    DELETE+ADD+CLOSE rename decomposition collapses to a path move and
    the whole fold is embarrassingly parallel across inodes. At 100 TB /
    billions of files this is a single shuffle by inode followed by
-   vectorized per-group folds — no global state, no locks (the
-   reference serializes everything behind ZK locks,
+   streamed per-inode folds — no global state, no locks (the reference
+   serializes everything behind ZK locks,
    SourceChangeDeltaProcessor.java:87-99).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from hcdc_spark.cdc.model import ERROR_SCHEMA, FILE_STATE_SCHEMA
 from hcdc_spark.cdc.statemachine import fold_events
@@ -176,6 +180,19 @@ def _safe_dir_ops(dir_rows: list) -> tuple[list, list]:
     return safe, deferred
 
 
+def _pad_to(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df`` in ``schema``'s column order, typed NULLs for the columns
+    it lacks (synthetic events carry a handful of fields). One
+    ``select`` is analyzed once; a per-field ``withColumn`` loop
+    re-analyzes the growing plan on every call."""
+    have = set(df.columns)
+    return df.select(*[
+        F.col(f.name) if f.name in have
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
+
+
 def _expand_round(
     events: DataFrame, dir_ops: DataFrame, seed: DataFrame | None
 ) -> DataFrame:
@@ -230,12 +247,7 @@ def _expand_round(
     )
 
     synthetic = deletes.unionByName(renames, allowMissingColumns=True)
-    for f in events.schema.fields:
-        if f.name not in synthetic.columns:
-            synthetic = synthetic.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    return base.unionByName(synthetic.select(*events.columns))
+    return base.unionByName(_pad_to(synthetic, events.schema))
 
 
 def _overwrite_deletes(
@@ -357,12 +369,13 @@ def expand_directory_events(
             "d_tx long, d_op string, d_path string, d_dest string,"
             " d_ts long, d_ns string",
         )
-        log = _expand_round(log, safe_df, seed)
+        # Materialize each round's log once: it re-enters the next
+        # round's joins several times, and the last round's log feeds
+        # both the overwrite-delete subplan and the fold, which would
+        # otherwise each recompute the round's expansion joins.
+        log = _expand_round(log, safe_df, seed).localCheckpoint(eager=False)
         if not deferred:
             break
-        # bound lineage growth across rounds: the log re-enters the next
-        # round's joins several times
-        log = log.localCheckpoint(eager=False)
     else:
         raise ValueError(
             f"directory-cascade fixpoint did not converge in {max_rounds} "
@@ -370,102 +383,52 @@ def expand_directory_events(
         )
 
     ow = _overwrite_deletes(log, _file_inodes(log, known), seed)
-    synthetic = ow
-    for f in events.schema.fields:
-        if f.name not in synthetic.columns:
-            synthetic = synthetic.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    return log.unionByName(synthetic.select(*events.columns))
+    return log.unionByName(_pad_to(ow, events.schema))
 
 
-_INT_FIELDS = {
-    "tx_id", "ts", "inode_id", "length", "block_size", "modified_time",
-    "accessed_time", "truncate_new_length", "block_id", "size",
-    "generation_stamp", "start_offset", "end_offset", "delta_size",
-}
+_FOLD_ARROW_SCHEMA = to_arrow_schema(_FOLD_OUTPUT_SCHEMA)
 
 
-def _clean(key: str, v):
-    """Arrow→pandas artifacts back to plain Python: NaN→None, integral
-    floats→int (nullable long columns surface as float64 in pandas)."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if pd.isna(v):
-            return None
-        if key in _INT_FIELDS:
-            return int(v)
-        return v
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return [
-            {k: _clean(k, x) for k, x in dict(item).items()} for item in v
-        ]
-    if hasattr(v, "item") and type(v).__module__ == "numpy":
-        return _clean(key, v.item())
-    return v
-
-
-_FOLD_COLS = [f.name for f in _FOLD_OUTPUT_SCHEMA.fields]
-
-
-def _fold_one(pdf: pd.DataFrame) -> dict:
-    """Fold one inode's events into a file_state row dict."""
-    if not pdf["tx_id"].is_monotonic_increasing:  # upstream sorts; verify
-        pdf = pdf.sort_values("tx_id")
-    events = [
-        {k: _clean(k, v) for k, v in rec.items()}
-        for rec in pdf.to_dict("records")
-    ]
+def _fold_inode(events: list[dict]) -> dict:
+    """Fold one inode's tx-sorted events into a file_state row dict."""
     state, errors = fold_events(None, events)
     if state is None:
         # Never created (all events errored) — emit an error-only row.
         state = {f.name: None for f in FILE_STATE_SCHEMA.fields}
-        state["inode_id"] = events[0].get("inode_id")
+        state["inode_id"] = events[0]["inode_id"]
         state["state"] = "Unknown"
-    state = dict(state)
     state["errors"] = errors
     return state
 
 
-def _fold_stream(batches) -> "pd.DataFrame":
-    """Fold MANY inodes per Arrow batch (mapInPandas body).
+def _fold_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Fold MANY inodes per Arrow batch (mapInArrow body).
 
     Input partitions are hash-partitioned by inode_id and sorted by
-    (inode_id, tx_id), so each inode's events arrive contiguous; Arrow
-    still cuts the partition into ~10k-row batches at arbitrary row
-    boundaries, so the group straddling a batch edge is buffered until
-    the next batch proves it complete. One output DataFrame per input
-    batch amortizes the Arrow round-trip across thousands of inodes —
-    the per-group ``applyInPandas`` formulation paid ~8.5 ms of
-    single-row-DataFrame + serialization overhead per inode (measured:
-    a 20k-op log folded in 35 s; this streaming fold does it in ~1 s),
-    which at billions of files is the difference between hours and
-    core-months. Fold semantics per inode are byte-identical — same
-    ``fold_events`` on the same tx-sorted rows.
+    (inode_id, tx_id), so each inode's events arrive as one contiguous,
+    tx-ordered run; Arrow still cuts the partition into batches at
+    arbitrary row boundaries, so the run straddling a batch edge is
+    carried until the next batch proves it complete. ``to_pylist``
+    hands ``fold_events`` plain Python values (no pandas NaN/numpy
+    artifacts to scrub), and one output batch per input batch amortizes
+    the Arrow round-trip across thousands of inodes — the per-group
+    ``applyInPandas`` formulation paid ~8.5 ms of single-row-DataFrame
+    + serialization overhead per inode, which at billions of files is
+    the difference between hours and core-months.
     """
-    buf: pd.DataFrame | None = None
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        buf = pdf if buf is None else pd.concat(
-            [buf, pdf], ignore_index=True
-        )
-        last = buf["inode_id"].iloc[-1]
-        done = buf[buf["inode_id"] != last]
-        if len(done):
-            yield pd.DataFrame(
-                [
-                    _fold_one(g)
-                    for _, g in done.groupby("inode_id", sort=False)
-                ],
-                columns=_FOLD_COLS,
-            )
-            buf = buf[buf["inode_id"] == last].reset_index(drop=True)
-    if buf is not None and len(buf):
-        yield pd.DataFrame(
-            [_fold_one(g) for _, g in buf.groupby("inode_id", sort=False)],
-            columns=_FOLD_COLS,
+    run: list[dict] = []
+    for batch in batches:
+        out = []
+        for ev in batch.to_pylist():
+            if run and ev["inode_id"] != run[0]["inode_id"]:
+                out.append(_fold_inode(run))
+                run = []
+            run.append(ev)
+        if out:
+            yield pa.RecordBatch.from_pylist(out, schema=_FOLD_ARROW_SCHEMA)
+    if run:
+        yield pa.RecordBatch.from_pylist(
+            [_fold_inode(run)], schema=_FOLD_ARROW_SCHEMA
         )
 
 
@@ -481,7 +444,7 @@ def reconcile_batch(events: DataFrame, expand_dirs: bool = True) -> DataFrame:
         log.where(F.col("inode_id").isNotNull())
         .repartition("inode_id")
         .sortWithinPartitions("inode_id", "tx_id")
-        .mapInPandas(_fold_stream, schema=_FOLD_OUTPUT_SCHEMA)
+        .mapInArrow(_fold_arrow, schema=_FOLD_OUTPUT_SCHEMA)
     )
 
 

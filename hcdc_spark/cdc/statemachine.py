@@ -1,7 +1,7 @@
 """Per-file CDC state machine (SURVEY.md §2C) — pure Python, no Spark.
 
 One implementation, two callers: the batch reconciler runs it inside
-``applyInPandas`` grouped by inode, the streaming reconciler inside
+``mapInArrow`` over inode-sorted runs, the streaming reconciler inside
 ``applyInPandasWithState``. Events for one file are folded in tx order;
 the function is deterministic and side-effect free, so replays are
 idempotent (guard T4) — exactly the property Spark's at-least-once

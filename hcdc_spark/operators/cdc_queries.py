@@ -50,7 +50,7 @@ def _demo_log(spark: SparkSession):
 #: Reconciled demo state memoized per application id: c01/c02/c03 all
 #: consume the SAME fold over the same seed-42 log, and the driver's
 #: harness runs them back-to-back in one session — re-running the
-#: applyInPandas fold three times bought nothing (measured ~9-12 s
+#: batch fold three times bought nothing (measured ~9-12 s
 #: each). The cached value is already materialized (tens of rows), so
 #: reuse is just a local-relation scan; fold semantics stay gated by
 #: test_cdc_batch's golden oracle.

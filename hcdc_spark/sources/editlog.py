@@ -714,13 +714,13 @@ def resolve_inodes(events, max_rounds: int = 10):
     from pyspark.sql import functions as F
 
     # Materialize the input once (lazily, on first action): every
-    # fixpoint round runs its own count job, and the final consumer a
-    # third — without this each of those jobs re-executes the whole
-    # upstream lineage, which for read_editlog_binary means re-decoding
-    # every segment in Python 3+ times (measured 3x the decode cost on
-    # the cdc scale bench). Executor-local checkpoint is the standard
-    # iterative-algorithm pattern; at 100 TB one materialized pass
-    # beats three re-decodes and the blocks drop with the reference.
+    # fixpoint round runs its own count job over it — without this each
+    # of those jobs re-executes the whole upstream lineage, which for
+    # read_editlog_binary means re-decoding every segment in Python per
+    # round (measured 3x the decode cost on the cdc scale bench).
+    # Executor-local checkpoint is the standard iterative-algorithm
+    # pattern; at 100 TB one materialized pass beats re-decodes and the
+    # blocks drop with the reference.
     events = events.localCheckpoint(eager=False)
 
     w = (
@@ -756,15 +756,22 @@ def resolve_inodes(events, max_rounds: int = 10):
             )
             .where(F.col("_alias") == 0)
             .drop("_alias")
+            .select(*events.columns)
         )
+        # Checkpoint every round's fill before its count job, which then
+        # fills the checkpoint: the next round starts from it (bounded
+        # lineage), and the round that ends the loop IS the resolved
+        # log. Every downstream consumer — the directory cascade's
+        # dir-op collect and path-history joins, the final fold —
+        # reads those blocks instead of recomputing the path window.
+        cur = cur.localCheckpoint(eager=False)
         unresolved = cur.where(
             F.col("inode_id").isNull() & F.col("path").isNotNull()
         ).count()
         if unresolved == 0 or unresolved == prev_unresolved:
             break
         prev_unresolved = unresolved
-        cur = cur.localCheckpoint(eager=False)  # bound loop lineage
-    return cur.select(*events.columns)
+    return cur
 
 
 def read_editlog_binary(

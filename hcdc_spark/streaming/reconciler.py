@@ -41,7 +41,6 @@ from hcdc_spark.cdc.model import (
     FILE_STATE_SCHEMA,
     STATE_BLOCK_STRUCT,
 )
-from hcdc_spark.cdc.reconcile import _clean
 from hcdc_spark.cdc.statemachine import fold_events
 
 
@@ -167,6 +166,33 @@ OUTPUT_SCHEMA = T.StructType(
     list(FILE_STATE_SCHEMA.fields)
     + [T.StructField("errors", T.ArrayType(ERROR_SCHEMA))]
 )
+
+
+_INT_FIELDS = {
+    "tx_id", "ts", "inode_id", "length", "block_size", "modified_time",
+    "accessed_time", "truncate_new_length", "block_id", "size",
+    "generation_stamp", "start_offset", "end_offset", "delta_size",
+}
+
+
+def _clean(key: str, v):
+    """Arrow→pandas artifacts back to plain Python: NaN→None, integral
+    floats→int (nullable long columns surface as float64 in pandas)."""
+    if v is None:
+        return None
+    if isinstance(v, float):
+        if pd.isna(v):
+            return None
+        if key in _INT_FIELDS:
+            return int(v)
+        return v
+    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
+        return [
+            {k: _clean(k, x) for k, x in dict(item).items()} for item in v
+        ]
+    if hasattr(v, "item") and type(v).__module__ == "numpy":
+        return _clean(key, v.item())
+    return v
 
 
 def _events_from_pandas(pdfs: Iterable[pd.DataFrame]) -> list[dict[str, Any]]:

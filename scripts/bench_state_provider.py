@@ -112,8 +112,15 @@ def _drain(spark, src: str, work: str, shape: str, provider: str) -> dict:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(1800)
+    finished = q.awaitTermination(1800)
     el = time.perf_counter() - t0
+    if not finished:
+        # a still-running drain would time a truncated pass, and the next
+        # _drain would start a second query on the same source
+        q.stop()
+        raise TimeoutError(
+            f"{shape} drain under {provider} still running after 1800 s"
+        )
     state_rows = 0
     lp = q.lastProgress
     if lp and lp.get("stateOperators"):
@@ -149,8 +156,7 @@ def main() -> None:
                         file=sys.stderr,
                     )
             out[shape] = best
-        out["rows"] = rows
-        print(json.dumps(out))
+        print(json.dumps({**out, "rows": rows}))
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hcdc_spark.cdc.generator import events_df, generate_events
-from hcdc_spark.cdc.model import empty_event
+from hcdc_spark.cdc.model import FILE_STATE_SCHEMA, empty_event
 from hcdc_spark.cdc.reconcile import (
     detect_tx_gaps,
     expand_directory_events,
@@ -208,7 +208,7 @@ def test_spark_matches_sequential_python_recreates(spark):
     """Re-created lifetimes (file-level AND cascade DELETE→re-ADD,
     truncate + post-truncate growth inside the new lifetime) must fold
     identically through the distributed reconciler (fixpoint cascade
-    expansion + applyInPandas statemachine) and the sequential
+    expansion + mapInArrow statemachine fold) and the sequential
     pure-Python replay — the Spark face of the epoch coverage the
     DuckDB relational-fold sweep gained this round. The subtree=True
     seeds add OVERLAPPING dir-op subtrees (same dir deleted twice with
@@ -510,3 +510,200 @@ def test_add_file_overwrite_deletes_other_inode(spark):
     assert state[1]["state"] == "Deleted"
     assert state[2]["state"] == "New"
     assert state[2]["path"] == "/a/x"
+
+
+# ------------------------------------------------- binary catch-up plan
+
+
+_TS0 = 1_700_000_000_000
+
+
+def _catchup_backlog(with_claims: bool) -> tuple[list[dict], list[dict]]:
+    """A small binary backlog and the same history as file-level events.
+
+    Returns (segment records, oracle events). Five files live in /d1,
+    /d1/sub, /d2 and /keep; /d1 is renamed and /d2 deleted as whole
+    directories, and /keep/f5 is renamed as a file. The oracle events
+    carry every inode id and spell the two directory ops out per child,
+    so ``_pure_python_reconcile`` folds them with no resolution or
+    cascade of its own. ``with_claims`` appends one RENAME with
+    OVERWRITE and one ADD with overwrite=true onto live files; each
+    must delete the file it displaces."""
+    from hcdc_spark.sources import editlog as E
+
+    recs: list[dict] = []
+    oracle: list[dict] = []
+
+    def emit(rec: dict, **resolved) -> dict:
+        rec["txid"] = len(recs) + 1
+        recs.append(rec)
+        out = E.ops_to_change_events([rec])[0]
+        out.update(resolved)
+        oracle.append(out)
+        return out
+
+    def put(ino: int, path: str, size: int, overwrite: bool = False) -> None:
+        blk = {"block_id": ino * 10, "size": 0, "generation_stamp": 1}
+        emit({"opcode": E.OP_ADD, "inode_id": ino, "path": path,
+              "mtime": _TS0 + ino, "atime": _TS0 + ino,
+              "block_size": 1 << 20, "overwrite": overwrite,
+              "blocks": [blk]})
+        emit({"opcode": E.OP_CLOSE, "inode_id": 0, "path": path,
+              "mtime": _TS0 + ino + 1, "atime": _TS0 + ino,
+              "block_size": 1 << 20, "blocks": [dict(blk, size=size)]},
+             inode_id=ino)
+
+    def children(dir_ev: dict, kids: dict[int, str]) -> None:
+        """Replace a directory op's oracle row by one row per child."""
+        oracle.remove(dir_ev)
+        for ino, path in kids.items():
+            child = dict(dir_ev, inode_id=ino, path=path, mode="Backlog")
+            if dir_ev["op"] == "RENAME":
+                child["dest_path"] = (
+                    dir_ev["dest_path"] + path[len(dir_ev["path"]):]
+                )
+                child["rename_opts"] = None
+            oracle.append(child)
+
+    put(11, "/d1/f1", 100)
+    put(12, "/d1/sub/f2", 200)
+    put(13, "/d2/f3", 300)
+    put(14, "/d2/f4", 400)
+    put(15, "/keep/f5", 500)
+    children(emit({"opcode": E.OP_RENAME, "src": "/d1", "dst": "/moved",
+                   "timestamp": _TS0 + 50, "options": []}),
+             {11: "/d1/f1", 12: "/d1/sub/f2"})
+    children(emit({"opcode": E.OP_DELETE, "path": "/d2",
+                   "timestamp": _TS0 + 51}),
+             {13: "/d2/f3", 14: "/d2/f4"})
+    emit({"opcode": E.OP_RENAME, "src": "/keep/f5", "dst": "/keep/f5b",
+          "timestamp": _TS0 + 52, "options": []}, inode_id=15)
+    if with_claims:
+        put(16, "/keep/g", 600)
+        ow = emit({"opcode": E.OP_RENAME, "src": "/keep/f5b",
+                   "dst": "/keep/g", "timestamp": _TS0 + 60,
+                   "options": [1]}, inode_id=15)  # 1 = OVERWRITE
+        oracle.append(dict(ow, op="DELETE", inode_id=16, path="/keep/g",
+                           dest_path=None, rename_opts=None))
+        put(17, "/keep/h", 700)
+        put(18, "/keep/h", 800, overwrite=True)
+        add = next(e for e in oracle
+                   if e["inode_id"] == 18 and e["op"] == "ADD_FILE")
+        oracle.append(dict(add, op="DELETE", inode_id=17, overwrite=None,
+                           blocks=None, block_size=None, length=None))
+    return recs, oracle
+
+
+def _write_segments(recs: list[dict], root) -> str:
+    """Two ``edits_*`` segments holding ``recs``; returns their glob."""
+    from hcdc_spark.sources.editlog import encode_segment
+
+    half = len(recs) // 2
+    for part in (recs[:half], recs[half:]):
+        lo, hi = part[0]["txid"], part[-1]["txid"]
+        (root / f"edits_{lo:019d}-{hi:019d}").write_bytes(
+            encode_segment(part, layout=-63)
+        )
+    return str(root / "edits_*")
+
+
+#: Spark jobs one catch-up of the small backlog may launch, planning
+#: and write together, without and with the two overwrite claims.
+#: Re-deriving the resolved or the dir-expanded log per consumer raises
+#: them to 33 and 38.
+MAX_CATCHUP_JOBS = {False: 19, True: 23}
+
+
+def _catchup_jobs(spark, glob: str, group: str):
+    """The catch-up state of the backlog at ``glob`` and the ids of the
+    jobs that decoding, planning and a noop write of it launch."""
+    from hcdc_spark.sources.editlog import read_editlog_binary
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "binary catch-up")
+    try:
+        df = reconcile_batch(read_editlog_binary(spark, glob))
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_matches_oracle(df, oracle: list[dict]) -> None:
+    got = {r["inode_id"]: r.asDict(recursive=True) for r in df.collect()}
+    errors = {i: g.pop("errors") for i, g in got.items()}
+    assert not any(errors.values()), errors
+    assert got == _pure_python_reconcile(oracle)
+
+
+@pytest.mark.parametrize("with_claims", [False, True])
+def test_catchup_job_count_and_oracle(spark, tmp_path, with_claims):
+    recs, oracle = _catchup_backlog(with_claims)
+    df, jobs = _catchup_jobs(
+        spark, _write_segments(recs, tmp_path), f"catchup-{with_claims}"
+    )
+    assert 0 < len(jobs) <= MAX_CATCHUP_JOBS[with_claims], jobs
+    if with_claims:
+        state = {r["inode_id"]: r for r in df.collect()}
+        assert state[16]["state"] == "Deleted"
+        assert state[17]["state"] == "Deleted"
+        assert state[15]["path"] == "/keep/g"
+    _assert_matches_oracle(df, oracle)
+
+
+def test_arrow_fold_matches_fold_events(spark):
+    """The mapInArrow fold against ``fold_events`` run directly, on its
+    edge cases: null ``blocks``, an inode whose events all error (the
+    ``state="Unknown"`` row), TRUNCATE deltas, and inode runs cut across
+    Arrow batches — two rows per batch splits every run of three or
+    more events, and inode 4's seven events span four batches."""
+    events = [
+        # null blocks on create and on close
+        ev(1, "ADD_FILE", path="/a/nulls", inode_id=1, blocks=None),
+        ev(2, "CLOSE", path="/a/nulls", inode_id=1, length=0, blocks=None),
+        # never created: every event errors
+        ev(3, "APPEND", path="/a/ghost", inode_id=2),
+        ev(4, "TRUNCATE", path="/a/ghost", inode_id=2,
+           truncate_new_length=1),
+        # truncate within a block, then past a whole block
+        ev(5, "ADD_FILE", path="/a/trunc", inode_id=3,
+           blocks=[blk(1, size=100)]),
+        ev(6, "ADD_BLOCK", path="/a/trunc", inode_id=3,
+           blocks=[blk(1, size=100), blk(2)]),
+        ev(7, "UPDATE_BLOCKS", path="/a/trunc", inode_id=3,
+           blocks=[blk(2, size=80)]),
+        ev(8, "TRUNCATE", path="/a/trunc", inode_id=3,
+           truncate_new_length=130),
+        ev(9, "TRUNCATE", path="/a/trunc", inode_id=3,
+           truncate_new_length=40),
+        ev(10, "ADD_FILE", path="/a/long", inode_id=4, blocks=[blk(4)]),
+    ] + [
+        ev(10 + k, "UPDATE_BLOCKS", path="/a/long", inode_id=4,
+           blocks=[blk(4, size=10 * k)])
+        for k in range(1, 6)
+    ] + [
+        ev(16, "CLOSE", path="/a/long", inode_id=4, length=50,
+           blocks=[blk(4, size=50)]),
+    ]
+    want = {}
+    for inode in {e["inode_id"] for e in events}:
+        run = sorted((e for e in events if e["inode_id"] == inode),
+                     key=lambda e: e["tx_id"])
+        state, errors = fold_events(None, run)
+        if state is None:
+            state = {f.name: None for f in FILE_STATE_SCHEMA.fields}
+            state.update(inode_id=inode, state="Unknown")
+        want[inode] = dict(state, errors=errors)
+    assert want[2]["state"] == "Unknown" and len(want[2]["errors"]) == 2
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = reconcile_batch(
+            events_df(spark, events), expand_dirs=False
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    got = {r["inode_id"]: r.asDict(recursive=True) for r in rows}
+    assert got == want
